@@ -34,6 +34,7 @@ from dstream_spark.fixtures.transcripts import transcripts_from_events
 from dstream_spark.operators.dedup import dedup_stream
 from dstream_spark.sinks.merge import MergeSink
 from dstream_spark.sources.registry import changefeed
+from dstream_spark.streaming_queries import drain
 
 
 def build_feed(
@@ -169,23 +170,7 @@ def run_dedup_sink(
     # derived values; out_rows and content are identical (A/B'd at the
     # 44M-event proxy: 461k -> 580k events/s median-of-3, interleaved).
     deduped = transform_stage(dedup_stream(src, watermark="30 minutes"))
-    n_input = spark.read.parquet(feed_dir).count()
-    t0 = time.time()
-    q = (
-        deduped.writeStream.foreachBatch(sink.process_batch)
-        .option("checkpointLocation", os.path.join(work_dir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    dt = time.time() - t0
-    out_rows = sink.read_table(spark).count()
-    return {
-        "events": n_input,
-        "seconds": round(dt, 2),
-        "events_per_sec": round(n_input / dt, 1),
-        "out_rows": out_rows,
-    }
+    return _timed_drain(spark, deduped, "append", sink, feed_dir, work_dir)
 
 
 def run_window_sink(
@@ -217,16 +202,17 @@ def run_window_sink(
         .agg(F.count(F.lit(1)).alias("n_turns"))
         .select(F.col("w.start").alias("w_start"), "conv_id", "n_turns")
     )
+    return _timed_drain(spark, agg, "update", sink, feed_dir, work_dir)
+
+
+def _timed_drain(
+    spark: SparkSession, df: DataFrame, mode: str, sink: MergeSink, feed_dir: str, work_dir: str
+) -> dict:
+    """Drain ``df`` into ``sink`` under the wall clock; returns
+    {events, seconds, events_per_sec, out_rows}."""
     n_input = spark.read.parquet(feed_dir).count()
     t0 = time.time()
-    q = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(sink.process_batch)
-        .option("checkpointLocation", os.path.join(work_dir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(df, mode, sink.process_batch, os.path.join(work_dir, "ckpt"))
     dt = time.time() - t0
     out_rows = sink.read_table(spark).count()
     return {

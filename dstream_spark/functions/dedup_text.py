@@ -234,21 +234,16 @@ def simhash_expr(text_col: str | Column = "text", bits: int = 32) -> Column:
     bit b of token t = (nibble(md5(t), b // 4) >> (b % 4)) & 1
     simhash bit b    = 1 iff sum(2*bit - 1) > 0 over tokens
 
-    Callers should materialize the token-hash array in a prior
-    projection and pass it as ``precomputed_hexes`` when building many
-    derived columns (see q_docs_simhash).
+    Callers building many derived columns should materialize the
+    md5-per-token array in a prior projection and fold it with
+    ``simhash_from_hexes`` instead of re-hashing per column.
     """
     toks = F.split(F.col(text_col) if isinstance(text_col, str) else text_col, " ")
     return simhash_from_hexes(F.transform(toks, F.md5), bits)
 
 
-def token_hexes(text_col: str = "text") -> Column:
-    """md5 hex per whitespace token — materialize this once, then feed
-    simhash_from_hexes (avoids re-hashing per derived column)."""
-    return F.transform(F.split(F.col(text_col), " "), F.md5)
-
-
 def simhash_from_hexes(hexes: Column, bits: int = 32) -> Column:
+    """The simhash_expr fold over an array of md5 hex token hashes."""
     def nibble(h: Column, i: int) -> Column:
         # instr is 1-based; md5 hex is lowercase on both engines
         return F.instr(F.lit("0123456789abcdef"), F.substring(h, i + 1, 1)) - 1
@@ -327,40 +322,6 @@ def simhash_table(
     return df.where(F.col(text_col).isNotNull()).select(
         id_col, _UDF_CACHE[key](F.col(text_col)).alias("simhash")
     )
-
-
-def simhash_table_agg(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 32,
-) -> DataFrame:
-    """The r5 explode + partially-aggregated groupBy form (equivalence
-    reference for tests): codegen'd conditional sums, one 32/48-vote
-    row per doc through the exchange."""
-    toks = df.select(id_col, F.explode(F.split(F.col(text_col), " ")).alias("tok"))
-    toks = toks.withColumn("h", F.md5("tok")).select(
-        id_col,
-        *[
-            (F.instr(F.lit("0123456789abcdef"), F.substring("h", i + 1, 1)) - 1).alias(
-                f"nib_{i}"
-            )
-            for i in range(bits // 4)
-        ],
-    )
-
-    def bit(b: int) -> Column:
-        return F.shiftright(F.col(f"nib_{b // 4}"), b % 4).bitwiseAND(F.lit(1))
-
-    votes = toks.groupBy(id_col).agg(
-        *[F.sum(bit(b) * 2 - 1).alias(f"v_{b}") for b in range(bits)]
-    )
-    acc = F.lit(0).cast("long")
-    for b in range(bits):
-        acc = acc + F.when(F.col(f"v_{b}") > 0, F.lit(2**b).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return votes.select(id_col, acc.alias("simhash"))
 
 
 def _popcount64(x):

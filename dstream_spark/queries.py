@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dstream_spark import streaming_queries as sq
 from dstream_spark.fixtures.transcripts import register_tables
 from dstream_spark.functions import dedup_text, similarity, text as textfn
 from dstream_spark.operators import cdc, dedup, joins, skew, windows
@@ -233,12 +234,6 @@ def q_scd2_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dstream_spark.operators.scd import scd2_build
 
     return scd2_build(_transcripts(spark, sf_dir))
-
-
-def _stream_scd2_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dstream_spark.streaming_queries import stream_scd2_build
-
-    return stream_scd2_build(spark, sf_dir)
 
 
 def q_scd2_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1238,36 +1233,6 @@ SELECT vec_id, c_id, sim FROM (
 }
 
 
-def _stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dstream_spark.streaming_queries import stream_tumbling_counts
-
-    return stream_tumbling_counts(spark, sf_dir)
-
-
-def _stream_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dstream_spark.streaming_queries import stream_exactly_once
-
-    return stream_exactly_once(spark, sf_dir)
-
-
-def _stream_pyds_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dstream_spark.streaming_queries import stream_pyds_feed
-
-    return stream_pyds_feed(spark, sf_dir)
-
-
-def _stream_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dstream_spark.streaming_queries import stream_time_travel
-
-    return stream_time_travel(spark, sf_dir)
-
-
-def _stream_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dstream_spark.streaming_queries import stream_incremental_read
-
-    return stream_incremental_read(spark, sf_dir)
-
-
 # the turn-sliced feed's closed-form slice rule (streaming_queries.
 # _write_feed split_by_turn): per = max(1, (max_turn+1+3)//4), epoch b
 # holds turn range [b*per, (b+1)*per) with the last epoch clamped —
@@ -1282,90 +1247,6 @@ _TIME_TRAVEL_SQL = _t_sql(
 _INCREMENTAL_SQL = _t_sql(
     _SLICE_PER_CTE + "SELECT t.* FROM transcripts t, m WHERE t.turn_idx >= 2 * m.per"
 )
-
-
-def _stream_cursor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dstream_spark.streaming_queries import stream_cursor_dedup
-
-    return stream_cursor_dedup(spark, sf_dir)
-
-
-def _stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dstream_spark.streaming_queries import stream_session_windows
-
-    return stream_session_windows(spark, sf_dir)
-
-
-def _stream_dedup_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dstream_spark.streaming_queries import stream_dedup_sessions
-
-    return stream_dedup_sessions(spark, sf_dir)
-
-
-def _stream_cdc_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dstream_spark.streaming_queries import stream_cdc_deletes
-
-    return stream_cdc_deletes(spark, sf_dir)
-
-
-def _stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dstream_spark.streaming_queries import stream_hourly_daily_rollup
-
-    return stream_hourly_daily_rollup(spark, sf_dir)
-
-
-def _stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dstream_spark.streaming_queries import stream_sliding_counts
-
-    return stream_sliding_counts(spark, sf_dir)
-
-
-def _stream_window_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dstream_spark.streaming_queries import stream_window_sink
-
-    return stream_window_sink(spark, sf_dir)
-
-
-def _stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dstream_spark.streaming_queries import stream_static_enrich
-
-    return stream_static_enrich(spark, sf_dir)
-
-
-def _stream_multi_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dstream_spark.streaming_queries import stream_multi_sink
-
-    return stream_multi_sink(spark, sf_dir)
-
-
-def _stream_inc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dstream_spark.streaming_queries import stream_inc_dedup
-
-    return stream_inc_dedup(spark, sf_dir)
-
-
-def _stream_resume_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dstream_spark.streaming_queries import stream_resume_identity
-
-    return stream_resume_identity(spark, sf_dir)
-
-
-def _stream_monitor_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dstream_spark.streaming_queries import stream_monitor_tables
-
-    return stream_monitor_tables(spark, sf_dir)
-
-
-def _stream_adaptive_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dstream_spark.streaming_queries import stream_adaptive_identity
-
-    return stream_adaptive_identity(spark, sf_dir)
-
-
-def _stream_cursor_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dstream_spark.streaming_queries import stream_cursor_dedup_ttl
-
-    return stream_cursor_dedup_ttl(spark, sf_dir)
 
 
 # closed sessions only: window end (last event + gap) <= final
@@ -1441,7 +1322,7 @@ QUERIES: dict[str, Query] = {
         "map-side predicate, 1-row broadcast bound scaffold",
     ),
     "stream_scd2_build": Query(
-        _stream_scd2_build, ORACLES["scd2_build"],
+        sq.stream_scd2_build, ORACLES["scd2_build"],
         "incremental SCD-2 build: stateful fold (open version per key) "
         "with retroactive closes as versioned upserts through the "
         "exactly-once MergeSink; feed-level replay absorbed by the "
@@ -1489,35 +1370,35 @@ QUERIES: dict[str, Query] = {
     "docs_simhash": Query(q_docs_simhash, ORACLES["docs_simhash"]),
     "docs_simhash_dups": Query(q_docs_simhash_dups, ORACLES["docs_simhash_dups"]),
     "stream_tumbling_counts": Query(
-        _stream_tumbling, ORACLES["tumbling_counts"],
+        sq.stream_tumbling_counts, ORACLES["tumbling_counts"],
         "ORACLE FORM ONLY: complete-mode memory sink re-emits all "
         "window state per batch (unbounded at scale) — the shipped "
         "plan is stream_window_sink (update mode -> keyed MERGE)",
     ),
     "stream_exactly_once": Query(
-        _stream_exactly_once, ORACLES["relay_identity"],
+        sq.stream_exactly_once, ORACLES["relay_identity"],
         "change feed with replayed batch → MergeSink → no dups, no loss",
     ),
     "stream_pyds_feed": Query(
-        _stream_pyds_feed, ORACLES["relay_identity"],
+        sq.stream_pyds_feed, ORACLES["relay_identity"],
         "Spark 4 Python DataSourceStreamReader (plugin CDC source with "
         "checkpointed offsets) → foreachBatch → exactly-once MergeSink "
         "under crash-replay; identity oracle",
     ),
     "stream_time_travel": Query(
-        _stream_time_travel, _TIME_TRAVEL_SQL,
+        sq.stream_time_travel, _TIME_TRAVEL_SQL,
         "TIME TRAVEL (read-as-of) on the exactly-once sink: table as "
         "of epoch 1 over a turn-sliced commit history; oracle = the "
         "closed-form slice rule",
     ),
     "stream_incremental_read": Query(
-        _stream_incremental_read, _INCREMENTAL_SQL,
+        sq.stream_incremental_read, _INCREMENTAL_SQL,
         "INCREMENTAL scan (changes between snapshots): epochs (1, ∞) "
         "— the downstream high-water-mark consumption shape; oracle = "
         "the slice-rule complement",
     ),
     "stream_monitor_tables": Query(
-        _stream_monitor_tables,
+        sq.stream_monitor_tables,
         _t_sql(
             """
 SELECT conv_id, turn_idx, role, text, tool, ts, 'turns' AS src_table
@@ -1531,67 +1412,67 @@ FROM transcripts WHERE tool IS NOT NULL"""
         "== both batch projections, no loss or dups on either table",
     ),
     "stream_adaptive_identity": Query(
-        _stream_adaptive_identity, ORACLES["relay_identity"],
+        sq.stream_adaptive_identity, ORACLES["relay_identity"],
         "dynamic batch sizing (S4) end-to-end: wave 1 at trigger=1, "
         "controller resizes from observed rows/file, wave 2 at the new "
         "trigger — sizing policy never changes WHAT is delivered",
     ),
     "stream_resume_identity": Query(
-        _stream_resume_identity, ORACLES["relay_identity"],
+        sq.stream_resume_identity, ORACLES["relay_identity"],
         "checkpoint resume end-to-end: drain half the feed, stop, land "
         "the rest, restart on the SAME checkpoint — merged table == "
         "identity (no loss across the stop, no dups across the restart)",
     ),
     "stream_cursor_dedup": Query(
-        _stream_cursor, ORACLES["relay_identity"],
+        sq.stream_cursor_dedup, ORACLES["relay_identity"],
         "applyInPandasWithState per-conv cursor over in-order feed + replay",
     ),
     "stream_cursor_dedup_ttl": Query(
-        _stream_cursor_ttl, ORACLES["relay_identity"],
+        sq.stream_cursor_dedup_ttl, ORACLES["relay_identity"],
         "the cursor WITH EventTimeTimeout TTL eviction over a "
         "time-ordered feed + replay (late-filter absorbs it) == "
         "identity; built r5, r6 gate window (rotation plan, COVERAGE.md)",
     ),
     "stream_session_windows": Query(
-        _stream_sessions,
+        sq.stream_session_windows,
         ORACLES["stream_session_windows"],
         "streaming session_window (append) == gaps-and-islands + closure predicate",
     ),
     "stream_dedup_sessions": Query(
-        _stream_dedup_sessions,
+        sq.stream_dedup_sessions,
         ORACLES["stream_session_windows"],
         "north-star chain: watermarked dedup -> session windows, TWO "
         "stateful ops in one streaming plan; replay invisible end-to-end",
     ),
     "stream_cdc_deletes": Query(
-        _stream_cdc_deletes,
+        sq.stream_cdc_deletes,
         ORACLES["cdc_with_deletes"],
         "insert/update/DELETE envelope through the exactly-once MERGE "
         "sink under replay == batch apply_changes oracle",
     ),
     "stream_hourly_daily_rollup": Query(
-        _stream_rollup,
+        sq.stream_hourly_daily_rollup,
         ORACLES["stream_hourly_daily_rollup"],
         "chained windowed aggs (hourly -> daily) in one streaming plan; "
         "the continuous-aggregate rollup shape, watermark-bounded twice",
     ),
     "stream_sliding_counts": Query(
-        _stream_sliding, ORACLES["sliding_counts"],
+        sq.stream_sliding_counts, ORACLES["sliding_counts"],
         "ORACLE FORM ONLY: complete-mode memory sink holds every "
         "sliding window forever — scale path is the watermark-bounded "
         "append/update forms (stream_window_sink et al.)",
     ),
     "stream_window_sink": Query(
-        _stream_window_sink, ORACLES["tumbling_counts"],
+        sq.stream_window_sink, ORACLES["tumbling_counts"],
         "north-star windowed pipeline: update-mode agg -> keyed exactly-once "
         "MERGE -> read back == batch tumbling oracle",
     ),
     "stream_multi_sink": Query(
-        _stream_multi_sink, ORACLES["relay_identity"],
+        sq.stream_multi_sink, ORACLES["relay_identity"],
         "fanout to two lineaged sinks under replay; 2nd destination == identity",
     ),
     "inc_dedup_log": Query(
-        _stream_inc_dedup,
+        sq.stream_inc_dedup,
         ORACLES["inc_dedup_log"],
         "incremental streaming LSH dedup: 4 id-ascending micro-batches "
         "through the growing exactly-once band index, epoch 1 crash-"
@@ -1599,7 +1480,7 @@ FROM transcripts WHERE tool IS NOT NULL"""
         "earlier-collision oracle",
     ),
     "stream_static_enrich": Query(
-        _stream_static_enrich,
+        sq.stream_static_enrich,
         _t_sql(
             """
 , dim AS (

@@ -1,64 +1,10 @@
-"""Per-batch metrics emission — the monitoring analog (C4:
-pkg/monitoring/monitoring.go:27-36 logs MemStats/goroutines; ours logs
-StreamingQuery progress JSON per micro-batch, which carries
-numInputRows, inputRowsPerSecond, processedRowsPerSecond and state-
-store memory — the north rule's "per-partition lineage + metrics"
-requirement pairs this with the MergeSink lineage table)."""
+"""Streaming failure capture: ``FailureCaptureListener`` records the
+exception that terminated a query together with that query's last
+observed progress, so a dead stream reports where it died."""
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql.streaming import StreamingQueryListener
-
-
-class JsonFileMetricsListener(StreamingQueryListener):
-    """Append one JSON line per batch progress to ``path``."""
-
-    def __init__(self, path: str):
-        self.path = path
-        os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-
-    def onQueryStarted(self, event) -> None:
-        self._write({"event": "started", "id": str(event.id), "name": event.name})
-
-    def onQueryProgress(self, event) -> None:
-        p = event.progress
-        rec = {
-            "event": "progress",
-            "name": p.name,
-            "batchId": p.batchId,
-            "numInputRows": p.numInputRows,
-            "inputRowsPerSecond": p.inputRowsPerSecond,
-            "processedRowsPerSecond": p.processedRowsPerSecond,
-        }
-        # state-store health per stateful operator (rows held + memory)
-        # — the MemStats half of the reference's monitor loop
-        try:
-            rec["state"] = [
-                {
-                    "operator": getattr(so, "operatorName", None),
-                    "numRowsTotal": so.numRowsTotal,
-                    "memoryUsedBytes": so.memoryUsedBytes,
-                }
-                for so in (p.stateOperators or [])
-            ]
-        except Exception:  # progress shape varies by query type
-            pass
-        self._write(rec)
-
-    def onQueryTerminated(self, event) -> None:
-        self._write(
-            {"event": "terminated", "id": str(event.id), "exception": event.exception}
-        )
-
-    def onQueryIdle(self, event) -> None:  # pragma: no cover
-        pass
-
-    def _write(self, obj: dict) -> None:
-        with open(self.path, "a") as f:
-            f.write(json.dumps(obj) + "\n")
 
 
 class FailureCaptureListener(StreamingQueryListener):

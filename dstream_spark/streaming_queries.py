@@ -9,15 +9,21 @@ evidence that the streaming path reproduces the reference's semantics
 (ordered delivery, dedup, windowed state, exactly-once sink) for the
 same input stream.
 
-Each run uses a fresh scratch dir under /tmp (left in place: returned
-DataFrames read lazily from it).
+Every availableNow run goes through ``drain``. Scratch dirs come from
+``_scratch``: all of them live under one per-process root that is
+removed when the process exits, so returned DataFrames read lazily
+from it until then.
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
 import tempfile
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,8 +35,48 @@ from dstream_spark.sources.registry import changefeed
 from dstream_spark.streaming.pipeline import Pipeline
 
 
+def _remove_root(root: str, owner_pid: int) -> None:
+    # a forked child inherits the atexit hook; only the creator deletes
+    if os.getpid() == owner_pid:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+@functools.cache
+def _scratch_root() -> str:
+    root = tempfile.mkdtemp(prefix="dstream_scratch_")
+    atexit.register(_remove_root, root, os.getpid())
+    return root
+
+
 def _scratch(tag: str) -> str:
-    return tempfile.mkdtemp(prefix=f"dstream_{tag}_")
+    return tempfile.mkdtemp(prefix=f"dstream_{tag}_", dir=_scratch_root())
+
+
+def drain(
+    df: DataFrame,
+    mode: str = "append",
+    sink: Callable[[DataFrame, int], None] | None = None,
+    checkpoint: str | None = None,
+) -> DataFrame | None:
+    """Run the streaming ``df`` with trigger(availableNow=True) until
+    it terminates.
+
+    ``sink=None`` writes to a memory sink under a unique query name and
+    returns that table. Otherwise ``sink`` is the foreachBatch body and
+    nothing is returned; it checkpoints in ``checkpoint``, or in a
+    fresh scratch dir when none is given."""
+    w = df.writeStream.outputMode(mode)
+    name = None
+    if sink is None:
+        name = f"drain_{uuid.uuid4().hex[:8]}"
+        w = w.format("memory").queryName(name)
+    else:
+        w = w.foreachBatch(sink)
+        checkpoint = checkpoint or _scratch("ckpt")
+    if checkpoint:
+        w = w.option("checkpointLocation", checkpoint)
+    w.trigger(availableNow=True).start().awaitTermination()
+    return None if name is None else df.sparkSession.table(name)
 
 
 def _write_feed(
@@ -117,8 +163,6 @@ def _write_feed(
             src = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
             dst = os.path.join(out_dir, f"batch_{b:05d}.parquet")
             os.rename(os.path.join(tmp, src), dst)
-            import shutil
-
             shutil.rmtree(tmp)
             # strictly increasing mtimes: the file source processes files
             # oldest-first, giving deterministic micro-batch order
@@ -145,16 +189,7 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "conv_id", "n_turns", "n_agent",
         )
     )
-    name = f"stream_tumble_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(agg, "complete")
 
 
 def stream_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -229,22 +264,13 @@ def stream_pyds_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     for f in held:
         os.rename(os.path.join(feed, f), os.path.join(hold_dir, f))
 
-    def run_once() -> None:
-        q = (
-            src.writeStream.foreachBatch(land)
-            .option("checkpointLocation", os.path.join(ckpt, "q"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    run_once()
+    drain(src, sink=land, checkpoint=ckpt)
     wave1_rows = sum(
         spark.read.parquet(p).count() for p in wave1
     )
     for f in held:
         os.rename(os.path.join(hold_dir, f), os.path.join(feed, f))
-    run_once()
+    drain(src, sink=land, checkpoint=ckpt)
     raw = sink.protocol.data_read(spark, sink.committed_batches())
     st = raw.agg(
         F.sum(F.when(F.col("batch_id") == 0, 1).otherwise(0)).alias("b0"),
@@ -335,8 +361,6 @@ def stream_resume_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
     across the restart (nothing re-applied). This is the reference's
     resume-from-cdc_offsets contract (docs/capability-inventory.md:
     179-187) driven end-to-end at the entry surface."""
-    import shutil
-
     staging = _scratch("resume_staging")
     feed = _scratch("resume_feed")
     table = _scratch("resume_table")
@@ -450,8 +474,6 @@ def stream_adaptive_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
     it's chunked. The entry raises if the controller failed to resize
     (the adaptive half) or the second wave processed nothing (the
     resume half)."""
-    import shutil
-
     from dstream_spark.streaming.adaptive import BatchSizeController
 
     staging = _scratch("adap_staging")
@@ -528,8 +550,6 @@ def stream_cdc_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
         src_file = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
         dst = os.path.join(feed, f"batch_{i:05d}.parquet")
         os.rename(os.path.join(tmp, src_file), dst)
-        import shutil
-
         shutil.rmtree(tmp)
         os.utime(dst, (t0 + i * 10, t0 + i * 10))
 
@@ -572,8 +592,6 @@ def stream_dedup_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     invisible THROUGH the whole chain, not just through one operator.
     Session emission uses the same closure predicate as
     stream_session_windows (w_end <= final watermark)."""
-    import uuid
-
     from dstream_spark.operators.event_time import with_event_time
     from dstream_spark.operators.windows import _flatten_window
 
@@ -590,16 +608,7 @@ def stream_dedup_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_turns")
         )
     )
-    name = f"dsess_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(agg)
 
 
 def stream_hourly_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -612,8 +621,6 @@ def stream_hourly_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     never re-reads raw turns. Emission: a daily window is final once
     its end <= final watermark; the oracle applies the same closure
     to the batch double-aggregation."""
-    import uuid
-
     from dstream_spark.operators.event_time import with_event_time
     from dstream_spark.operators.windows import _flatten_window
 
@@ -633,16 +640,7 @@ def stream_hourly_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("active_hours"),
         )
     )
-    name = f"rollup_{uuid.uuid4().hex[:8]}"
-    q = (
-        daily.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(daily)
 
 
 def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -658,16 +656,7 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dstream_spark.operators.windows import session_stream
 
     agg = session_stream(src, "30 minutes", keys=("conv_id",), watermark="30 minutes")
-    name = f"stream_sess_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(agg)
 
 
 def stream_cursor_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -678,16 +667,7 @@ def stream_cursor_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     _write_feed(spark, sf_dir, feed, n_batches=4, replay_batch0=True, split_by_turn=True)
     src = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
     out = cursor_dedup_stream(src)
-    name = f"stream_cursor_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(out)
 
 
 def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -703,16 +683,7 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         src, "1 hour", "30 minutes", keys=("role",),
         aggs=[F.count(F.lit(1)).alias("n_turns")],
     )
-    name = f"stream_slide_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(agg, "complete")
 
 
 def stream_window_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -727,7 +698,6 @@ def stream_window_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     feed = _scratch("wsink_feed")
     table = _scratch("wsink_table")
-    ckpt = _scratch("wsink_ckpt")
     _write_feed(spark, sf_dir, feed, n_batches=4, split_by_time=True)
     src = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
     agg = tumbling(
@@ -748,14 +718,7 @@ def stream_window_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         version_col="_v",
         n_partitions=8,
     )
-    q = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(sink.process_batch)
-        .option("checkpointLocation", os.path.join(ckpt, "q"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(agg, "update", sink.process_batch)
     return sink.read_table(spark).select("w_start", "w_end", "conv_id", "n_turns", "n_agent")
 
 
@@ -781,16 +744,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(dim), "tool")
         .select("conv_id", "turn_idx", "tool", "tool_total")
     )
-    name = f"senrich_{uuid.uuid4().hex[:8]}"
-    q = (
-        enriched.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(enriched)
 
 
 def stream_multi_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -878,16 +832,7 @@ def stream_cursor_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     _write_feed(spark, sf_dir, feed, n_batches=4, replay_batch0=True, split_by_time=True)
     src = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
     out = _cds(src, ttl_s=1800, wm_delay_s=600)
-    name = f"cursor_ttl_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(out)
 
 
 def stream_scd2_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -910,7 +855,6 @@ def stream_scd2_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     feed = _scratch("scd2_feed")
     table = _scratch("scd2_table")
-    ckpt = _scratch("scd2_ckpt")
     _write_feed(spark, sf_dir, feed, n_batches=4, replay_batch0=True, split_by_time=True)
     src = changefeed(spark, {"path": feed, "max_files_per_trigger": 1})
     out = scd2_stream(changes_of(src.select("conv_id", "turn_idx", "role", "text", "tool", "ts")))
@@ -922,14 +866,7 @@ def stream_scd2_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         version_col="_v",
         n_partitions=4,
     )
-    q = (
-        out.writeStream.outputMode("append")
-        .foreachBatch(sink.process_batch)
-        .option("checkpointLocation", os.path.join(ckpt, "q"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(out, sink=sink.process_batch)
     return sink.read_table(spark).select(
         "tool", "conv_id", "turn_idx", "valid_from", "valid_to", "attr", "is_current"
     )

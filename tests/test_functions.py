@@ -90,6 +90,44 @@ def test_shingles_short_docs_empty(spark):
     assert jaccard_pairs(df, threshold=0.1).collect() == []
 
 
+def test_shingle_and_minhash_kernels_equal_expression_forms(spark):
+    """The Arrow kernels word_shingles / minhash_signature must equal
+    their expression forms word_shingles_expr / minhash_signature_expr
+    on NULL, empty, short (< k tokens), repeated-token and
+    double-space text."""
+    from dstream_spark.functions.dedup_text import (
+        minhash_signature,
+        minhash_signature_expr,
+        word_shingles_expr,
+    )
+
+    texts = [
+        None, "", "one", "just two", "now three tokens", "a a a a a",
+        "x y x y x y", "a  b c", "the cat sat on the cat sat",
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id int, text string")
+    sh = df.select(
+        "doc_id",
+        word_shingles("text", 3).alias("sh"),
+        word_shingles_expr("text", 3).alias("sh_expr"),
+    )
+    rows = sh.select(
+        "doc_id", "sh", "sh_expr",
+        F.array(*minhash_signature(F.col("sh"))).alias("mh"),
+        F.array(*minhash_signature_expr(F.col("sh"))).alias("mh_expr"),
+    ).collect()
+    assert len(rows) == len(texts)
+    for r in rows:
+        assert r.sh == r.sh_expr, (texts[r.doc_id], r.sh, r.sh_expr)
+        assert r.mh == r.mh_expr, (texts[r.doc_id], r.mh, r.mh_expr)
+    by_id = {r.doc_id: r for r in rows}
+    assert by_id[0].sh == [] and by_id[0].mh == [None] * len(by_id[0].mh)
+    assert by_id[5].sh == ["a a a"]  # repeated shingles collapse
+    assert by_id[6].sh == ["x y x", "y x y"]
+    assert by_id[7].sh == ["a  b", " b c"]  # the empty token is kept
+    assert None not in by_id[8].mh
+
+
 def test_simhash_banded_dups_equal_brute_force(spark):
     """simhash_near_dups (pigeonhole segment join) must return exactly
     the brute-force all-pairs result."""
@@ -196,7 +234,7 @@ def test_jaccard_max_df_cap(spark):
 
 
 def test_simhash_table_equals_expression_form(spark):
-    """simhash_table (explode + partial aggregate) must equal
+    """simhash_table (numpy votes in one Arrow UDF) must equal
     simhash_expr (per-row bit folds) on identical input."""
     from dstream_spark.functions.dedup_text import simhash_table
 
