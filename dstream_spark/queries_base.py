@@ -175,14 +175,20 @@ def _scan_bytes(df: DataFrame) -> int | None:
     files. Lets broadcast decisions on DERIVED tables read REAL sizes
     the way ``maybe_broadcast`` does for source tables — size
     ESTIMATES after aggregations are unusable for this, which is why
-    the planner alone gets those joins wrong (guide §3.1)."""
+    the planner alone gets those joins wrong (guide §3.1). Only
+    ``file:`` URIs are sized (percent-decoded); any other scheme, or a
+    vanished file, gives None."""
     import os
+    from urllib.parse import unquote, urlparse
 
     files = df.inputFiles()
     if not files:
         return None
+    uris = [urlparse(f) for f in files]
+    if any(u.scheme not in ("", "file") for u in uris):
+        return None
     try:
-        return sum(os.path.getsize(f.replace("file:", "")) for f in files)
+        return sum(os.path.getsize(unquote(u.path)) for u in uris)
     except OSError:
         return None
 

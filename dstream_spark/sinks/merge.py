@@ -21,19 +21,15 @@ plus a commit-marker protocol:
    markers, so a crash between data write and marker leaves invisible
    orphans, not dups.
 
-HOW a finished batch becomes visible is a pluggable CommitProtocol:
-
-- ``rename`` (default, local FS): data+lineage staged to tmp dirs and
-  atomically renamed into place; the lineage-dir rename is the commit
-  point. Depends on atomic directory rename — POSIX only.
-- ``marker`` (object-store-safe): every attempt writes to a UNIQUE
-  attempt directory that is never renamed; the commit point is a
-  put-if-absent of a small JSON marker naming the committed attempt.
-  No operation relies on atomic rename of multi-file directories —
-  only single-object put-if-absent (S3/GCS: If-None-Match PUT) and,
-  for compaction's pointer swap, single-object replace (conditional
-  PUT If-Match). This is the same pointer-swap design as an Iceberg
-  snapshot commit.
+HOW a finished batch becomes visible is one object-store-safe commit
+protocol (``MarkerCommitProtocol``): every attempt writes to a UNIQUE
+attempt directory that is never renamed; the commit point is a
+put-if-absent of a small JSON marker naming the committed attempt.
+No operation relies on atomic rename of multi-file directories — only
+single-object put-if-absent (S3/GCS: If-None-Match PUT) and, for
+compaction's pointer swap, single-object replace (conditional PUT
+If-Match). This is the same pointer-swap design as an Iceberg
+snapshot commit.
 
 This is merge-on-read: appends + read-side latest-version resolution
 (apply_changes), the same strategy as Iceberg MoR MERGE. On a real
@@ -78,98 +74,6 @@ def _put_if_absent(path: str, payload: dict) -> bool:
         os.unlink(tmp)
 
 
-class RenameCommitProtocol:
-    """Local-FS commit: stage to tmp dirs, atomic directory rename into
-    place; the lineage dir's rename is the commit marker (it lands
-    LAST). Correct only where directory rename is atomic."""
-
-    name = "rename"
-
-    def __init__(self, table_dir: str):
-        self.data_dir = os.path.join(table_dir, "data")
-        self.lineage_dir = os.path.join(table_dir, "_lineage")
-
-    def init(self) -> None:
-        os.makedirs(self.data_dir, exist_ok=True)
-        os.makedirs(self.lineage_dir, exist_ok=True)
-
-    def committed_batches(self) -> set[int]:
-        if not os.path.isdir(self.lineage_dir):
-            return set()
-        return {
-            int(d.split("=", 1)[1])
-            for d in os.listdir(self.lineage_dir)
-            if d.startswith("batch_id=") and d.split("=", 1)[1].isdigit()
-        }
-
-    def publish(self, batch_id: int, write_data, write_lineage) -> None:
-        data_path = os.path.join(self.data_dir, f"batch_id={batch_id}")
-        lineage_path = os.path.join(self.lineage_dir, f"batch_id={batch_id}")
-        tmp_data = data_path + f".tmp-{uuid.uuid4().hex[:8]}"
-        tmp_lin = lineage_path + f".tmp-{uuid.uuid4().hex[:8]}"
-        write_data(tmp_data)
-        write_lineage(tmp_lin)
-        # two renames; marker (lineage) rename LAST = the commit point
-        if os.path.exists(data_path):
-            shutil.rmtree(data_path)
-        os.rename(tmp_data, data_path)
-        os.rename(tmp_lin, lineage_path)
-
-    def data_read(self, spark: SparkSession, batch_ids: set[int]) -> DataFrame:
-        """Committed data paths. A marker whose data dir is mid-swap
-        (compact crashed between the aside rename and the snapshot
-        rename) resolves to its ``.old`` aside — a marker therefore
-        never points at nothing. mergeSchema unions the footer schemas
-        across epochs (merge-on-read SCHEMA EVOLUTION, the
-        Iceberg/Delta norm): a column added in a later epoch reads as
-        NULL on earlier rows, a column dropped later reads as NULL on
-        later rows — without it Spark pins one arbitrary footer's
-        schema and silently drops drifted columns."""
-        paths = []
-        for b in sorted(batch_ids):
-            p = os.path.join(self.data_dir, f"batch_id={b}")
-            paths.append(p if os.path.exists(p) else p + ".old")
-        return (
-            spark.read.option("basePath", self.data_dir)
-            .option("mergeSchema", "true")
-            .parquet(*paths)
-        )
-
-    def lineage_read(self, spark: SparkSession) -> DataFrame:
-        return spark.read.option("basePath", self.lineage_dir).parquet(self.lineage_dir)
-
-    def swap_base(self, base_id: int, retire_ids, write_data, write_lineage) -> None:
-        """Replace base_id's contents with a new snapshot and retire
-        the superseded batches. Safe swap order — at every step a
-        reader sees a consistent set (the new base is a superset;
-        latest-version dedup absorbs the temporary overlap)."""
-        tmp_data = os.path.join(self.data_dir, f".compact-{uuid.uuid4().hex[:8]}")
-        write_data(tmp_data)
-        tmp_lin = os.path.join(self.lineage_dir, f".compact-{uuid.uuid4().hex[:8]}")
-        write_lineage(tmp_lin, tmp_data)
-        base_data = os.path.join(self.data_dir, f"batch_id={base_id}")
-        aside = base_data + ".old"
-        # 1. move old base data aside (data_read serves the aside while
-        #    the base dir is absent, so the mid-swap window is readable;
-        #    existence guards make a re-run after a crash idempotent)
-        if os.path.exists(base_data):
-            shutil.rmtree(aside, ignore_errors=True)  # stale aside from a crashed run
-            os.rename(base_data, aside)
-        os.rename(tmp_data, base_data)  # 2. new full snapshot in place
-        base_marker = os.path.join(self.lineage_dir, f"batch_id={base_id}")
-        old_marker_aside = base_marker + ".old"
-        if os.path.exists(base_marker):
-            shutil.rmtree(old_marker_aside, ignore_errors=True)
-            os.rename(base_marker, old_marker_aside)
-        os.rename(tmp_lin, base_marker)  # 3. marker now describes the snapshot
-        for b in retire_ids:  # 4. retire superseded markers, THEN their data
-            shutil.rmtree(os.path.join(self.lineage_dir, f"batch_id={b}"), ignore_errors=True)
-        for b in retire_ids:
-            shutil.rmtree(os.path.join(self.data_dir, f"batch_id={b}"), ignore_errors=True)
-        shutil.rmtree(aside, ignore_errors=True)
-        shutil.rmtree(old_marker_aside, ignore_errors=True)
-
-
 class MarkerCommitProtocol:
     """Object-store-safe commit: attempts write to unique directories
     that are NEVER renamed or mutated; visibility = a small JSON marker
@@ -179,8 +83,6 @@ class MarkerCommitProtocol:
     put-if-absent and deletes its own attempt. Compaction re-points the
     base marker via single-object replace (conditional PUT analog) —
     the Iceberg snapshot-pointer swap."""
-
-    name = "marker"
 
     def __init__(self, table_dir: str):
         self.data_dir = os.path.join(table_dir, "data")
@@ -214,7 +116,8 @@ class MarkerCommitProtocol:
         )
 
     def _marker(self, batch_id: int) -> dict:
-        return json.load(open(self._marker_path(batch_id)))
+        with open(self._marker_path(batch_id)) as f:
+            return json.load(f)
 
     def publish(self, batch_id: int, write_data, write_lineage) -> None:
         data_path, lin_path = self._attempt_paths(batch_id)
@@ -231,21 +134,23 @@ class MarkerCommitProtocol:
             shutil.rmtree(lin_path, ignore_errors=True)
 
     def data_read(self, spark: SparkSession, batch_ids: set[int]) -> DataFrame:
-        # one read per attempt root, each with ITSELF as basePath, then
-        # union: a single multi-root read cannot infer hive partition
-        # subdirs (bucket=XX under hive_partition_by sinks) because the
-        # attempt-<id> segment between the roots is not key=value
-        # (CONFLICTING_DIRECTORY_STRUCTURES). Root count = committed
-        # batches, bounded by compact().
-        paths = [self._marker(b)["data"] for b in sorted(batch_ids)]
-        dfs = [spark.read.option("basePath", p).parquet(p) for p in paths]
-        out = dfs[0]
-        for df in dfs[1:]:
-            # allowMissingColumns = the same merge-on-read schema
-            # evolution as the rename protocol's mergeSchema: an
-            # epoch that adds (or drops) a column unions with
-            # NULL-fill instead of throwing
-            out = out.unionByName(df, allowMissingColumns=True)
+        """Committed rows of ``batch_ids``, each tagged with its
+        ``batch_id`` column. One read per attempt root, each with
+        ITSELF as basePath, then union: a single multi-root read cannot
+        infer hive partition subdirs (bucket=XX under hive_partition_by
+        sinks) because the attempt-<id> segment between the roots is
+        not key=value (CONFLICTING_DIRECTORY_STRUCTURES). Root count =
+        committed batches, bounded by compact().
+
+        unionByName(allowMissingColumns) is merge-on-read SCHEMA
+        EVOLUTION (the Iceberg/Delta norm): a column added in a later
+        epoch reads as NULL on earlier rows, a column dropped later
+        reads as NULL on later rows."""
+        out = None
+        for b in sorted(batch_ids):
+            p = self._marker(b)["data"]
+            df = spark.read.option("basePath", p).parquet(p).withColumn("batch_id", F.lit(b))
+            out = df if out is None else out.unionByName(df, allowMissingColumns=True)
         return out
 
     def lineage_read(self, spark: SparkSession) -> DataFrame:
@@ -276,9 +181,6 @@ class MarkerCommitProtocol:
         shutil.rmtree(old["lineage"], ignore_errors=True)
 
 
-PROTOCOLS = {"rename": RenameCommitProtocol, "marker": MarkerCommitProtocol}
-
-
 class MergeSink:
     """Parquet-backed exactly-once keyed sink."""
 
@@ -290,11 +192,10 @@ class MergeSink:
         order_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
         version_col: str | None = None,
         n_partitions: int = 8,
-        protocol: str = "rename",
         hive_partition_by: str | None = None,
     ):
         self.table_dir = table_dir
-        self.protocol = PROTOCOLS[protocol](table_dir)
+        self.protocol = MarkerCommitProtocol(table_dir)
         self.data_dir = self.protocol.data_dir
         self.lineage_dir = self.protocol.lineage_dir
         self.keys = keys
@@ -533,7 +434,6 @@ class MergeSink:
         committed = self.committed_batches()
         return {
             "table_dir": self.table_dir,
-            "protocol": self.protocol.name,
             "committed_batches": len(committed),
             "max_batch_id": max(committed) if committed else None,
         }

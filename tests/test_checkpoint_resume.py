@@ -1,7 +1,7 @@
 """Checkpoint/resume + exactly-once — the reference's D2-D4 contracts
 (docs/capability-inventory.md:179-183, docs/plugins/mssql-ingester.md:
-84-87): stop mid-stream, restart from checkpoint, no loss and no dups;
-replayed epochs are harmless."""
+84-87): stop mid-stream, restart from checkpoint, no loss and no dups.
+Replayed and uncommitted epochs are covered in test_commit_protocols."""
 
 from __future__ import annotations
 
@@ -64,38 +64,3 @@ def test_resume_from_checkpoint_no_loss_no_dup(spark, tmp_path):
     out = sink.read_table(spark)
     assert out.count() == len(pdf)  # no loss
     assert out.select("conv_id", "turn_idx").distinct().count() == len(pdf)  # no dup
-
-
-def test_replayed_epoch_is_idempotent(spark, tmp_path):
-    """Crash between sink write and offset commit ⇒ same (batch_df,
-    batch_id) delivered again. The commit marker makes it a no-op."""
-    pdf = generate_transcripts(n_convs=3, turns_per_conv=5)
-    sink = MergeSink(str(tmp_path / "table"), n_partitions=2)
-    sdf = spark.createDataFrame(pdf[["conv_id", "turn_idx", "role", "text", "tool", "ts"]])
-    sink.process_batch(sdf, 7)
-    first = sink.read_table(spark).toPandas().sort_values(["conv_id", "turn_idx"])
-    sink.process_batch(sdf, 7)  # replay
-    second = sink.read_table(spark).toPandas().sort_values(["conv_id", "turn_idx"])
-    assert len(first) == len(pdf)
-    assert first.reset_index(drop=True).equals(second.reset_index(drop=True))
-    assert sink.status()["committed_batches"] == 1
-
-
-def test_uncommitted_data_is_invisible(spark, tmp_path):
-    """Crash AFTER data files, BEFORE the lineage marker: reader must
-    not see the orphaned batch (commit-by-marker protocol)."""
-    import shutil
-
-    pdf = generate_transcripts(n_convs=2, turns_per_conv=4)
-    sink = MergeSink(str(tmp_path / "table"), n_partitions=2)
-    sdf = spark.createDataFrame(pdf[["conv_id", "turn_idx", "role", "text", "tool", "ts"]])
-    sink.process_batch(sdf, 0)
-    # simulate the torn write: batch 1 data present, marker missing
-    sink.process_batch(sdf.withColumn("turn_idx", sdf.turn_idx + 1000), 1)
-    shutil.rmtree(os.path.join(sink.lineage_dir, "batch_id=1"))
-    out = sink.read_table(spark)
-    assert out.count() == len(pdf)
-    assert out.filter("turn_idx >= 1000").count() == 0
-    # the replayed epoch then commits it for real
-    sink.process_batch(sdf.withColumn("turn_idx", sdf.turn_idx + 1000), 1)
-    assert sink.read_table(spark).count() == 2 * len(pdf)

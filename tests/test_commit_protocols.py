@@ -1,6 +1,6 @@
-"""CommitProtocol contract: the exactly-once guarantees (replay
-idempotency, crash-window invisibility, compaction) must hold through
-the object-store-safe ``marker`` protocol, which never relies on
+"""Commit protocol contract: the exactly-once guarantees (replay
+idempotency, crash-window invisibility, compaction) hold through the
+MergeSink's object-store-safe marker protocol, which never relies on
 atomic directory rename — only single-object put-if-absent (the
 If-None-Match PUT analog) and single-object replace for the compaction
 pointer swap. Reference contract: MERGE-upsert checkpoint table +
@@ -44,7 +44,7 @@ def test_put_if_absent_single_winner(tmp_path):
 
 def test_marker_replay_is_idempotent(spark, tmp_path):
     pdf = generate_transcripts(n_convs=3, turns_per_conv=5)
-    sink = MergeSink(str(tmp_path / "tbl"), n_partitions=2, protocol="marker")
+    sink = MergeSink(str(tmp_path / "tbl"), n_partitions=2)
     sdf = _sdf(spark, pdf)
     sink.process_batch(sdf, 7)
     first = sink.read_table(spark).toPandas().sort_values(["conv_id", "turn_idx"])
@@ -62,7 +62,7 @@ def test_marker_uncommitted_data_is_invisible(spark, tmp_path):
     put: the orphan attempt must be invisible, and the replayed epoch
     then commits for real."""
     pdf = generate_transcripts(n_convs=2, turns_per_conv=4)
-    sink = MergeSink(str(tmp_path / "tbl"), n_partitions=2, protocol="marker")
+    sink = MergeSink(str(tmp_path / "tbl"), n_partitions=2)
     sdf = _sdf(spark, pdf)
     sink.process_batch(sdf, 0)
     sink.process_batch(sdf.withColumn("turn_idx", sdf.turn_idx + 1000), 1)
@@ -81,7 +81,7 @@ def test_marker_duplicate_commit_loses_put_and_cleans_up(spark, tmp_path):
     second put-if-absent loses, its attempt dir is removed, and the
     table serves the first writer's rows."""
     pdf = generate_transcripts(n_convs=2, turns_per_conv=3)
-    sink = MergeSink(str(tmp_path / "tbl"), n_partitions=2, protocol="marker")
+    sink = MergeSink(str(tmp_path / "tbl"), n_partitions=2)
     sdf = _sdf(spark, pdf)
     sink.process_batch(sdf, 3)
     # bypass the committed_batches() fast path: force a second publish
@@ -96,7 +96,7 @@ def test_marker_duplicate_commit_loses_put_and_cleans_up(spark, tmp_path):
 
 def test_marker_compaction_preserves_table(spark, tmp_path):
     pdf = generate_transcripts(n_convs=4, turns_per_conv=6)
-    sink = MergeSink(str(tmp_path / "tbl"), n_partitions=2, protocol="marker")
+    sink = MergeSink(str(tmp_path / "tbl"), n_partitions=2)
     step = len(pdf) // 4
     for b in range(4):
         sink.process_batch(_sdf(spark, pdf.iloc[b * step:(b + 1) * step]), b)
@@ -142,7 +142,7 @@ def test_marker_protocol_streaming_end_to_end(spark, tmp_path):
         shutil.rmtree(tmp)
         os.utime(f"{feed}/b{i}.parquet", (1_700_000_000 + i, 1_700_000_000 + i))
 
-    sink = MergeSink(str(tmp_path / "tbl"), n_partitions=2, protocol="marker")
+    sink = MergeSink(str(tmp_path / "tbl"), n_partitions=2)
     q = (
         changefeed(spark, {"path": feed})
         .writeStream.foreachBatch(sink.process_batch)

@@ -137,18 +137,16 @@ def test_incompatible_type_change_fails_loudly(spark, tmp_path):
         _run(spark, feed, sink, str(tmp_path / "ckpt"))
 
 
-@pytest.mark.parametrize("protocol", ["rename", "marker"])
-def test_sink_side_additive_schema_evolution(spark, tmp_path, protocol):
+def test_sink_side_additive_schema_evolution(spark, tmp_path):
     """Merge-on-read schema evolution at the SINK (the Iceberg/Delta
     norm): an epoch that ADDS a column unions with NULL-fill on
-    earlier rows — rename protocol via parquet mergeSchema, marker
-    protocol via unionByName(allowMissingColumns). Without it the
-    rename read pins one arbitrary footer's schema (silently dropping
-    the new column) and the marker read throws. Exactly-once under
-    replay is unchanged: the replayed old-schema epoch is absorbed by
-    its commit marker, never re-unioned."""
+    earlier rows, via unionByName(allowMissingColumns) over the
+    per-epoch reads. Without it the read throws on the mismatched
+    schemas. Exactly-once under replay is unchanged: the replayed
+    old-schema epoch is absorbed by its commit marker, never
+    re-unioned."""
     pdf = generate_transcripts(n_convs=2, turns_per_conv=4)
-    sink = MergeSink(str(tmp_path / f"tbl_{protocol}"), n_partitions=2, protocol=protocol)
+    sink = MergeSink(str(tmp_path / "tbl"), n_partitions=2)
     base = spark.createDataFrame(pdf[["conv_id", "turn_idx", "role", "text", "tool", "ts"]])
     sink.process_batch(base, 0)
 

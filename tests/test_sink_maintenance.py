@@ -13,60 +13,62 @@ from dstream_spark.sinks.merge import MergeSink
 from dstream_spark.streaming.pipeline import Pipeline
 
 
-def test_compaction_preserves_table_and_bounds_batches(spark, tmp_path):
-    pdf = generate_transcripts(n_convs=4, turns_per_conv=6)
-    sink = MergeSink(str(tmp_path / "tbl"), n_partitions=2)
-    sdf = spark.createDataFrame(pdf[["conv_id", "turn_idx", "role", "text", "tool", "ts"]])
-    # five committed batches with disjoint turn ranges
-    for b in range(5):
-        part = sdf.filter((sdf.turn_idx % 5) == b)
-        sink.process_batch(part, b)
-    before = sink.read_table(spark).toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-    assert len(sink.committed_batches()) == 5
-
-    base = sink.compact(spark)
-    assert sink.committed_batches() == {base}
-    after = sink.read_table(spark).toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-    assert before.equals(after)
-
-    # replay of a folded epoch is still a no-op (ids <= base are committed
-    # history semantically; the marker for base covers them)
-    sink.process_batch(sdf.limit(3), base)
-    assert sink.read_table(spark).count() == len(before)
-
-    # a NEW epoch after compaction appends normally
-    extra = spark.createDataFrame(
-        generate_transcripts(n_convs=1, turns_per_conv=3, seed=9).assign(conv_id="cX")[
-            ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-        ]
-    )
-    sink.process_batch(extra, base + 1)
-    assert sink.read_table(spark).count() == len(before) + 3
+class _Crash(Exception):
+    """An injected process death inside compact()."""
 
 
-def test_compaction_crash_window_still_readable(spark, tmp_path):
-    """Crash-safety of compact(): in the window where the old base data
-    dir has been renamed aside but the new snapshot isn't in place yet,
-    a reader must still see every committed row (the marker resolves to
-    the .old aside), and re-running compact() must recover."""
+def _sorted_table(spark, sink):
+    cols = ["conv_id", "turn_idx"]
+    return sink.read_table(spark).toPandas().sort_values(cols).reset_index(drop=True)
+
+
+# MarkerCommitProtocol.swap_base's crash points, each named by the
+# first filesystem call on the table that does not happen, with the
+# number of markers a reader sees in that window:
+# 1. new base attempt + lineage written, base marker not yet replaced;
+# 2. base marker replaced, retired markers not yet unlinked;
+# 3. retired markers unlinked, old attempt dirs not yet removed.
+@pytest.mark.parametrize(
+    "module,call,n_markers",
+    [("os", "replace", 3), ("os", "unlink", 3), ("shutil", "rmtree", 1)],
+    ids=["before_marker_replace", "before_retire_unlink", "before_attempt_rmtree"],
+)
+def test_compaction_crash_at_each_swap_step(
+    spark, tmp_path, monkeypatch, module, call, n_markers
+):
+    """A crash at any step of compact()'s pointer swap leaves the table
+    readable and unchanged, and re-running compact() finishes the fold
+    into the one base batch with the same rows."""
+    import shutil
+
     pdf = generate_transcripts(n_convs=3, turns_per_conv=5)
-    sink = MergeSink(str(tmp_path / "tbl"), n_partitions=2)
+    table = str(tmp_path / "tbl")
+    sink = MergeSink(table, n_partitions=2)
     sdf = spark.createDataFrame(pdf[["conv_id", "turn_idx", "role", "text", "tool", "ts"]])
     for b in range(3):
         sink.process_batch(sdf.filter((sdf.turn_idx % 3) == b), b)
-    total = sink.read_table(spark).count()
+    before = _sorted_table(spark, sink)
+    assert len(before) == len(pdf)
     base = max(sink.committed_batches())
 
-    # simulate the crash: step 1 of the swap happened, nothing else
-    base_data = os.path.join(sink.data_dir, f"batch_id={base}")
-    os.rename(base_data, base_data + ".old")
-    assert sink.read_table(spark).count() == total  # reader unaffected
+    target = {"os": os, "shutil": shutil}[module]
+    real = getattr(target, call)
 
-    # recovery: compact() re-runs to completion on the same sink
-    sink.compact(spark)
+    def crash(path, *args, **kwargs):
+        if str(path).startswith(table):
+            raise _Crash(f"{call}({path})")
+        return real(path, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(target, call, crash)
+        with pytest.raises(_Crash):
+            sink.compact(spark)
+    assert len(sink.committed_batches()) == n_markers
+    assert _sorted_table(spark, sink).equals(before)  # reader unaffected
+
+    assert sink.compact(spark) == base  # recovery: re-run on the same sink
     assert sink.committed_batches() == {base}
-    assert sink.read_table(spark).count() == total
-    assert not os.path.exists(base_data + ".old")
+    assert _sorted_table(spark, sink).equals(before)
 
 
 def test_bad_source_type_fails_fast(spark, tmp_path):

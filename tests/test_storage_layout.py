@@ -161,3 +161,28 @@ def test_dynamic_partition_pruning_fires_on_dim_join(spark, tmp_path, sf_dir):
     expect = fact.filter(F.col("day").isin(days)).groupBy("day").count()
     got = {(r.day, r["count"]) for r in j.collect()}
     assert got == {(r.day, r["count"]) for r in expect.collect()}
+
+
+def test_scan_bytes_sizes_percent_encoded_paths(spark, tmp_path):
+    """inputFiles() returns percent-encoded file: URIs ("t 1%" becomes
+    "t%201%25"). The size probe must decode them and sum the real
+    file sizes, not give up and return None (which silently disables
+    the broadcast decision). A non-file scheme is not sized."""
+    import glob
+    import os
+
+    from dstream_spark.queries_base import _scan_bytes
+
+    d = str(tmp_path / "sb dir" / "t 1%")
+    spark.range(1000).repartition(3).write.parquet(d)
+    df = spark.read.parquet(d)
+    assert any("%25" in f for f in df.inputFiles())
+    on_disk = sum(os.path.getsize(f) for f in glob.glob(os.path.join(glob.escape(d), "*.parquet")))
+    assert on_disk > 0
+    assert _scan_bytes(df) == on_disk
+
+    class _Remote:
+        def inputFiles(self):
+            return ["s3a://bucket/t/part-0.parquet"]
+
+    assert _scan_bytes(_Remote()) is None
